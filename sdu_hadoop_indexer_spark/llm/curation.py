@@ -2042,7 +2042,7 @@ def _dsir_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dw = _dsir_doc_weights(spark, sf_dir)
     u = (
-        F.pmod(xh1(F.col("doc_id").cast("string")), F.lit(GUMBEL_M)) + 1
+        F.pmod(xh1("CAST(doc_id AS STRING)"), F.lit(GUMBEL_M)) + 1
     ) / F.lit(float(GUMBEL_M + 2))
     g_q = F.round(-F.log(-F.log(u)) * DSIR_SCALE, 0).cast("long")
     return dw.withColumn("g_q", g_q)

@@ -20,13 +20,12 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..iteration import RoundStager, stage_round
+from ..iteration import RoundStager
 from ..operators.parity import ratio, sql_ratio
 from ..registry import register
 from ..text.indexer import TOK_SQL, tokenize
@@ -318,39 +317,49 @@ def _table_rows(sf_dir: str, name: str) -> int:
         return -1
 
 
-def _fits_broadcast(spark: SparkSession, rows: int, bytes_per_row: int) -> bool:
+def _broadcast_cap(spark: SparkSession) -> int:
+    """The session's own autoBroadcastJoinThreshold in bytes (≤ 0 is
+    Spark's broadcast-disabled setting)."""
+    return _parse_size_bytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    )
+
+
+def _fits_broadcast(
+    spark: SparkSession, rows: int, bytes_per_row: int, extra_bytes: int = 0
+) -> bool:
     """Shared size gate for ANY explicit broadcast hint (VERDICT r8 item 3 /
     ADVICE r8): estimated in-memory bytes of the candidate build side
     (rows × a caller-supplied conservative per-row width MATCHING THE
     RELATION ACTUALLY BROADCAST — the r8 lesson from gating a slim
     (vec_id, cell) relation with the full-embedding width) against the
-    session's own autoBroadcastJoinThreshold. Unknown row count (< 0) or
-    broadcast-disabled threshold → False: the hint is omitted and the join
-    degrades to a co-partitioned shuffle — a slowdown, never an OOM."""
+    session's own autoBroadcastJoinThreshold. ``extra_bytes`` adds columns
+    estimated another way (the token arrays, `_arrs_bytes`) to the SAME
+    sum, so a side carrying both is gated on its whole width. Unknown row
+    count (< 0) or broadcast-disabled threshold → False: the hint is
+    omitted and the join degrades to a co-partitioned shuffle — a
+    slowdown, never an OOM."""
     if rows < 0:
         return False
-    cap = _parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    )
-    if cap <= 0:
-        return False
-    return rows * bytes_per_row <= cap
+    cap = _broadcast_cap(spark)
+    return cap > 0 and rows * bytes_per_row + extra_bytes <= cap
+
+
+def _arrs_bytes(sf_dir: str) -> int:
+    """Estimated in-memory bytes of the doc→token-array relation: it is
+    bounded by the documents table's text volume, so source parquet bytes
+    × expansion factor."""
+    return _source_bytes(sf_dir, "documents") * _ARRS_EXPANSION
 
 
 def _arrs_fits_broadcast(spark: SparkSession, sf_dir: str) -> bool:
     """Size-gate for broadcasting the doc→token-array relation (VERDICT r5
-    item 3): the relation is bounded by the documents table's text volume,
-    so estimate it from the source parquet bytes × expansion factor and
-    compare against the session's own autoBroadcastJoinThreshold. Above
+    item 3) against the session's own autoBroadcastJoinThreshold. Above
     the threshold (or threshold ≤ 0, Spark's broadcast-disabled setting)
     the caller omits the hint and the join degrades to a co-partitioned
     shuffle — a slowdown, never an executor OOM."""
-    cap = _parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    )
-    if cap <= 0:
-        return False
-    return _source_bytes(sf_dir, "documents") * _ARRS_EXPANSION <= cap
+    cap = _broadcast_cap(spark)
+    return cap > 0 and _arrs_bytes(sf_dir) <= cap
 
 
 @register(
@@ -583,10 +592,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     tset = _token_sets(spark, sf_dir).select(
         "doc_id", xh1("term").alias("x1"), xh2("term").alias("x2")
     )
-    aggs = [
-        F.min(hfam(i, F.col("x1"), F.col("x2"))).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]
+    aggs = [F.min(hfam(i)).alias(f"h{i}") for i in range(N_HASHES)]
     return tset.groupBy("doc_id").agg(*aggs)
 
 
@@ -694,9 +700,7 @@ def _lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         sig = minhash_signatures(spark, sf_dir)
         band_cols = [
-            combine(
-                [F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-            )
+            combine([f"h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)])
             for b in range(N_BANDS)
         ]
         return sig.select(
@@ -852,10 +856,7 @@ def dedup_minhash_est_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     side = stage_round(
         th.groupBy("doc_id").agg(
-            *[
-                F.min(hfam(i, F.col("x1"), F.col("x2"))).alias(f"h{i}")
-                for i in range(N_HASHES)
-            ],
+            *[F.min(hfam(i)).alias(f"h{i}") for i in range(N_HASHES)],
             F.collect_list("tx").alias("toks"),
             F.count("*").alias("sz"),
         ),
@@ -873,10 +874,10 @@ def dedup_minhash_est_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("toks").alias("tb"),
         F.col("sz").alias("sb"),
     )
-    # per-doc row ≈ 16 hashes + the token array — broadcast only when
-    # BOTH the arrs gate and the 256 B/row signature gate agree
-    if _arrs_fits_broadcast(spark, sf_dir) and _fits_broadcast(
-        spark, _table_rows(sf_dir, "documents"), 256
+    # per-doc row = 16 hashes (256 B) + the token array: gate their SUM —
+    # two separate gates each passing could still overshoot the cap ~2×
+    if _fits_broadcast(
+        spark, _table_rows(sf_dir, "documents"), 256, _arrs_bytes(sf_dir)
     ):
         sa_side, sb_side = F.broadcast(sa_side), F.broadcast(sb_side)
     m = sum(
@@ -902,6 +903,9 @@ def dedup_minhash_est_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MAX_CC_ITERS = 20
 
+# One bucket id per (band_idx, band_hash), the same SQL in both engines.
+_BKT_SQL = f"CAST(band_idx AS BIGINT) * {COMBINE_BOUND} + band_hash"
+
 
 def _cluster_labels_sql() -> str:
     """CTE chain ending in `labels`(doc_id, cluster_rep): the ORACLE replays
@@ -910,8 +914,9 @@ def _cluster_labels_sql() -> str:
     two hash joins over the (docs × N_BANDS)-sized member set, so the oracle
     stays linear at any SF (a transitive-closure formulation was quadratic in
     cluster size — minutes of single-threaded DuckDB at sf0.1 where this
-    runs in milliseconds) and, because it mirrors the iteration cap too, it
-    matches Spark even on a hypothetical non-converged corpus."""
+    runs in milliseconds). Spark stops at the first fixed point, which every
+    later round repeats, and raises where MAX_CC_ITERS rounds do not reach
+    one, so the two agree on every corpus Spark answers."""
     # MATERIALIZED is load-bearing: DuckDB inlines CTEs by default, and each
     # round references its predecessor twice — uninlined, the expression
     # tree doubles per round (2^MAX_CC_ITERS blowup).
@@ -932,14 +937,65 @@ def _cluster_labels_sql() -> str:
     rounds_sql = ",\n    ".join(rounds)
     return f"""{_bands_sql()},
     member AS MATERIALIZED (
-        SELECT DISTINCT CAST(band_idx AS BIGINT) * {COMBINE_BOUND} + band_hash
-                   AS bkt,
-               doc_id
+        SELECT DISTINCT {_BKT_SQL} AS bkt, doc_id
         FROM bands
     ),
     l0 AS MATERIALIZED (SELECT DISTINCT doc_id, doc_id AS label FROM member),
     {rounds_sql},
     labels AS (SELECT doc_id, label AS cluster_rep FROM {prev})"""
+
+
+def _min_label_components(member: DataFrame, reliable: bool = False) -> DataFrame:
+    """(doc_id, label): connected components of the doc↔bucket graph
+    `member`(bkt, doc_id) by min-label propagation — label = the min doc_id
+    of the doc's component.
+
+    Each round is two half-rounds over one (bkt, doc_id, label) relation:
+    every bucket takes the min label of its members (a window over bkt),
+    then every doc the min over its buckets (a window over doc_id). Round 1
+    is seeded with label = doc_id, i.e. min(doc_id) per bucket — no
+    label-seed distinct and no join. Each half-round is one exchange, and
+    rounds are staged lazily, so a round's last stage runs inside the next
+    round's first job: one Spark job per half-round and no probe job.
+
+    The fixed-point test rides the bucket half-round as an Observation: the
+    labels are a fixed point exactly when every bucket's members already
+    share one label (min == max per bucket), so the loop stops at the first
+    fixed point. The round staged alongside that test changed no label, so
+    it is returned as is. Only a component with a doc more than
+    MAX_CC_ITERS hops from its min doc_id (a long chain) misses the fixed
+    point within MAX_CC_ITERS rounds; that raises, because the labels would
+    split the component (and the oracle, which unrolls exactly MAX_CC_ITERS
+    rounds, would disagree). Scale trade-off: a hot bucket is one window
+    group, sorted and spilled within one task, where a join would have
+    split it."""
+    by_bkt, by_doc = Window.partitionBy("bkt"), Window.partitionBy("doc_id")
+    stager = RoundStager(reliable, eager=False)
+    state = member.select("bkt", "doc_id", F.col("doc_id").alias("label"))
+    for _ in range(MAX_CC_ITERS + 1):  # the last pass only tests round MAX
+        split = Observation()
+        buckets = state.select(
+            "bkt",
+            "doc_id",
+            F.min("label").over(by_bkt).alias("lo"),
+            F.max("label").over(by_bkt).alias("hi"),
+        ).observe(split, F.count_if(F.col("lo") < F.col("hi")).alias("n"))
+        # `first` marks one row per doc (its smallest bucket) so the output
+        # needs no regrouping exchange
+        state = stager.stage(
+            buckets.select(
+                "bkt",
+                "doc_id",
+                F.min("lo").over(by_doc).alias("label"),
+                (F.col("bkt") == F.min("bkt").over(by_doc)).alias("first"),
+            )
+        )
+        if split.get["n"] == 0:
+            return state.where("first").select("doc_id", "label")
+    raise RuntimeError(
+        f"connected components: no fixed point within {MAX_CC_ITERS} rounds "
+        f"(a chain longer than {MAX_CC_ITERS} hops)"
+    )
 
 
 @register(
@@ -957,19 +1013,22 @@ def dedup_minhash_cluster(
     All-pairs candidate output (`dedup_minhash_lsh`) is inherently quadratic
     in cluster size; production dedup pipelines instead resolve connected
     components over the doc↔bucket bipartite graph and keep one doc per
-    component. Iterative min-label propagation (doc → min label in each of
-    its buckets → min over buckets), O(docs) rows per iteration, converging
-    in O(component diameter) rounds — duplicate clusters are near-cliques, so
-    2-3 rounds in practice. Convergence is detected via the monotone
-    sum-of-labels invariant (one cheap agg per round, no join-based diff);
-    `iteration.stage_round` truncates lineage each round (``reliable=True``
-    stages rounds to parquet — the executor-loss-safe cluster form;
-    default executor-local blocks are the right price single-JVM). Output: (doc_id,
-    cluster_rep) where cluster_rep = min doc_id of the component; tests
-    assert every true τ=0.9 Jaccard pair lands in one cluster and that the
-    assignment is idempotent."""
-    # member is re-read twice per iteration — checkpoint it once up front so
-    # the signature pipeline doesn't rerun 2×MAX_CC_ITERS times.
+    component. Iterative min-label propagation (`_min_label_components`:
+    doc → min label in each of its buckets → min over buckets), O(docs)
+    rows per round, converging in O(component diameter) rounds — duplicate
+    clusters are near-cliques, so round 1 is usually already the fixed
+    point. Convergence is exact: the labels are final when every bucket's
+    members share one label, tested inside the next bucket half-round, so a
+    round costs one Spark job per half-round and the typical run fires two
+    rounds' jobs plus the output's. No fixed point within MAX_CC_ITERS
+    rounds raises RuntimeError rather than returning split components.
+    ``reliable=True`` stages rounds to parquet — the executor-loss-safe
+    cluster form; default executor-local blocks are the right price
+    single-JVM. Output: (doc_id, cluster_rep) where cluster_rep = min doc_id
+    of the component; tests assert every true τ=0.9 Jaccard pair lands in
+    one cluster and that the assignment is idempotent."""
+    # member is a projection of the persisted `_lsh_bands` pin, re-read by
+    # every round without re-running the signature pipeline.
     # bkt packs (band_idx, band_hash) collision-free: band_hash <
     # COMBINE_BOUND (= XH_P**2, the combine()'s exclusive bound), and
     # band_idx <= 3 keeps the packed key < 2**62 — int64-safe on both engines.
@@ -977,67 +1036,30 @@ def dedup_minhash_cluster(
     # embeds band_idx, so (bkt, doc_id) is already unique — a distinct here
     # is a pure extra shuffle. (The DuckDB oracle keeps its DISTINCT; min
     # aggregation makes duplicates harmless on either side.)
-    member = stage_round(
-        _lsh_bands(spark, sf_dir).select(
-            (
-                F.col("band_idx").cast("long") * COMBINE_BOUND
-                + F.col("band_hash")
-            ).alias("bkt"),
-            "doc_id",
-        ),
-        reliable,
-    )
-    # labels chain: ≤1 staged copy on disk. LAZY staging (eager=False):
-    # every round already ends in an action (the convergence-probe agg), so
-    # that one job materializes the round's checkpoint blocks as a side
-    # effect — the separate eager materialization job per round was pure
-    # overhead (the BPE-loop finding applied here; 2 jobs/round → 1).
-    stager = RoundStager(reliable, eager=False)
-    labels = stager.stage(
-        member.select("doc_id").distinct().withColumn("label", F.col("doc_id"))
-    )
-    prev_sum = None
-    converged = False
-    for _ in range(MAX_CC_ITERS):
-        bucket_min = (
-            member.join(labels, "doc_id")
-            .groupBy("bkt")
-            .agg(F.min("label").alias("bucket_label"))
-        )
-        labels = stager.stage(
-            member.join(bucket_min, "bkt")
-            .groupBy("doc_id")
-            .agg(F.min("bucket_label").alias("label"))
-        )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:  # labels only ever decrease → fixed point
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"dedup_minhash_cluster: no fixed point within {MAX_CC_ITERS} "
-            "iterations — labels may span unconverged long-chain components",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+    member = _lsh_bands(spark, sf_dir).selectExpr(f"{_BKT_SQL} AS bkt", "doc_id")
+    labels = _min_label_components(member, reliable)
     return labels.select("doc_id", F.col("label").alias("cluster_rep"))
 
 
+# SimHash vote sums (bit i votes ±tf on the parity of family member i) and
+# their sign-bit packing into one bigint: the same SQL text runs in Spark
+# and in the DuckDB oracle. The packed sum cannot overflow: the positive
+# bits sum to < 2**63 before the sign bit adds -2**63.
+_SIMHASH_VOTES = [
+    f"sum(CASE WHEN {hfam_sql(i)} % 2 = 1 THEN tf ELSE -tf END) AS v{i}"
+    for i in range(64)
+]
+_SIMHASH_PACK = " + ".join(
+    f"(CASE WHEN v{i} > 0 THEN {2 ** i}::BIGINT ELSE 0::BIGINT END)"
+    if i < 63
+    else f"(CASE WHEN v{i} > 0 THEN (-9223372036854775807 - 1)::BIGINT "
+    "ELSE 0::BIGINT END)"
+    for i in range(64)
+)
+
+
 def _simhash_oracle() -> str:
-    votes = ",\n               ".join(
-        f"sum(CASE WHEN {hfam_sql(i)} % 2 = 1 THEN tf ELSE -tf END) AS v{i}"
-        for i in range(64)
-    )
-    pack = " + ".join(
-        f"(CASE WHEN v{i} > 0 THEN {2 ** i}::BIGINT ELSE 0::BIGINT END)"
-        if i < 63
-        else f"(CASE WHEN v{i} > 0 THEN (-9223372036854775807 - 1)::BIGINT "
-        "ELSE 0::BIGINT END)"
-        for i in range(64)
-    )
+    votes = ",\n               ".join(_SIMHASH_VOTES)
     return f"""
     WITH {TOK_SQL},
     flat AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
@@ -1045,7 +1067,7 @@ def _simhash_oracle() -> str:
            FROM flat),
     votes AS (SELECT doc_id, {votes}
               FROM th GROUP BY doc_id)
-    SELECT doc_id, {pack} AS simhash FROM votes
+    SELECT doc_id, {_SIMHASH_PACK} AS simhash FROM votes
     """
 
 
@@ -1058,35 +1080,17 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROWS-ONLY); fingerprint bit = sign of the vote sum. Assembled from 64
     per-bit conditional sums in ONE hash aggregation (no explode), then
     packed into a bigint with bit arithmetic — all JVM-side, and the DuckDB
-    oracle replays the identical votes for an EXACT compare. Tests assert:
-    identical docs → identical fingerprints; hamming distance correlates
-    with Jaccard on near-dup pairs.
+    oracle replays the identical vote and pack SQL for an EXACT compare.
+    Tests assert: identical docs → identical fingerprints; hamming distance
+    correlates with Jaccard on near-dup pairs.
     """
     from ..text.indexer import index_flat
 
     flat = index_flat(spark, sf_dir).select(
         "doc_id", "tf", xh1("term").alias("x1"), xh2("term").alias("x2")
     )
-    votes = [
-        F.sum(
-            F.when(
-                hfam(i, F.col("x1"), F.col("x2")) % 2 == 1, F.col("tf")
-            ).otherwise(-F.col("tf"))
-        ).alias(f"v{i}")
-        for i in range(64)
-    ]
-    per_doc = flat.groupBy("doc_id").agg(*votes)
-    bits = [
-        F.when(F.col(f"v{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        * F.lit(2 ** i).cast("long")
-        if i < 63
-        else F.when(F.col(f"v{i}") > 0, F.lit(-(2 ** 63)).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for i in range(64)
-    ]
-    fingerprint = reduce(lambda x, y: x + y, bits)
-    return per_doc.select("doc_id", fingerprint.alias("simhash"))
+    per_doc = flat.groupBy("doc_id").agg(*map(F.expr, _SIMHASH_VOTES))
+    return per_doc.selectExpr("doc_id", f"{_SIMHASH_PACK} AS simhash")
 
 
 # staged fingerprint table (round-9, the _lsh_bands discipline applied to

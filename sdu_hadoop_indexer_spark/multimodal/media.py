@@ -489,7 +489,6 @@ def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..xhash import _fold
 
     r = resize_images(media_table(spark, sf_dir), max_side=256)
-    decoded = F.col("payload_resized").cast("string")
     return r.select(
         "media_id",
         "kind",
@@ -498,7 +497,9 @@ def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "out_width",
         "out_height",
         F.length("payload_resized").alias("len_resized"),
-        _fold(decoded, 131, 7).alias("digest_resized"),
+        _fold("CAST(payload_resized AS STRING)", 131, 7).alias(
+            "digest_resized"
+        ),
     )
 
 
@@ -796,14 +797,9 @@ def media_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(0).cast("long"), F.col("nx") * F.col("ny") - 1)
         ).alias("idx"),
     )
-    k = F.col("nx") * F.col("ny")
-    start = F.expr("(n * idx) div (nx * ny)")
-    slen = F.expr(
-        "(n * (idx + 1)) div (nx * ny) - (n * idx) div (nx * ny)"
-    )
-    patch = F.substring(
-        F.col("txt"), (start + 1).cast("int"), slen.cast("int")
-    )
+    start = "(n * idx) div (nx * ny)"
+    slen = f"(n * (idx + 1)) div (nx * ny) - {start}"
+    patch = f"substring(txt, CAST({start} + 1 AS INT), CAST({slen} AS INT))"
     return t.select(
         "media_id",
         (F.col("idx") % F.col("nx")).cast("int").alias("tile_x"),
@@ -819,6 +815,6 @@ def media_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("int")
         .alias("tile_h"),
-        F.length(patch).cast("long").alias("patch_len"),
+        F.expr(f"CAST(length({patch}) AS BIGINT)").alias("patch_len"),
         xh1(patch).alias("patch_xh"),
     )

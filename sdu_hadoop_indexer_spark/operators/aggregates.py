@@ -745,7 +745,7 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..xhash import xh1, xh2
 
     o = table(spark, sf_dir, "orders")
-    key = F.col("o_custkey").cast("string")
+    key = "CAST(o_custkey AS STRING)"
     h = o.select(
         "o_orderstatus",
         (xh1(key) % _HLL_M).alias("reg"),

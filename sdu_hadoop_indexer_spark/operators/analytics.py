@@ -3939,10 +3939,8 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..xhash import A as _XA, B as _XB, C as _XC, XH_P, xh1, xh2
 
     li = table(spark, sf_dir, "lineitem")
-    key = F.concat(
-        F.col("l_orderkey").cast("string"),
-        F.lit("|"),
-        F.col("l_linenumber").cast("string"),
+    key = (
+        "concat(CAST(l_orderkey AS STRING), '|', CAST(l_linenumber AS STRING))"
     )
     # spread BEFORE the fold (guide §2.5): the per-row char-fold plus the
     # {BOOT_B}× Generate otherwise fuse into the single-row-group scan task

@@ -264,7 +264,7 @@ def filter_ip_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..xhash import XH_P, xh1, xh2
 
     ev = table(spark, sf_dir, "events")
-    key = F.concat(F.col("user_id").cast("string"), F.lit("|ip"))
+    key = "concat(CAST(user_id AS STRING), '|ip')"
     ips = (
         ev.select("user_id")
         .distinct()

@@ -724,7 +724,7 @@ def winnow_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_grams",
         F.col("p").cast("long").alias("p"),
-        xh1(F.substring("norm", F.col("p") + 1, k)).alias("h"),
+        xh1(f"substring(norm, p + 1, {k})").alias("h"),
     )
     wins = (
         g.select(

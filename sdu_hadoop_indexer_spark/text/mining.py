@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..iteration import RoundStager, stage_round
 from ..registry import register
-from ..xhash import hfam, hfam_sql, xh1, xh1_sql, xh2, xh2_sql
+from ..xhash import hfam_sql, xh1, xh1_sql, xh2, xh2_sql
 from .indexer import TOK_SQL
 
 PR_DAMPING = 0.85
@@ -192,13 +192,20 @@ CMS_WIDTH = 256
 CMS_TOPK = 20
 
 
-def _cms_cells(df: DataFrame) -> DataFrame:
-    """term → (CMS_DEPTH rows of) (d, cell) via the cross-engine hash family
-    (depth d uses family member d over the fold pair), keeping the grid
-    coordinates identical in DuckDB."""
-    x1, x2 = xh1("term"), xh2("term")
-    cells = F.array(*[(hfam(d, x1, x2) % CMS_WIDTH) for d in range(CMS_DEPTH)])
-    return df.select("term", F.posexplode(cells).alias("d", "cell"))
+# (d, cell) generator: depth d is family member d over the fold pair
+_CMS_CELLS_SQL = (
+    "posexplode(array("
+    + ", ".join(f"{hfam_sql(d)} % {CMS_WIDTH}" for d in range(CMS_DEPTH))
+    + ")) AS (d, cell)"
+)
+
+
+def _cms_cells(df: DataFrame, keep: str = "term") -> DataFrame:
+    """term → (CMS_DEPTH rows of) (keep, d, cell) via the cross-engine hash
+    family, keeping the grid coordinates identical in DuckDB."""
+    return df.select(
+        keep, xh1("term").alias("x1"), xh2("term").alias("x2")
+    ).selectExpr(keep, _CMS_CELLS_SQL)
 
 
 def _cms_cells_sql(src: str) -> str:
@@ -220,10 +227,8 @@ def countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count("*").alias("tc"))
     )
-    x1, x2 = xh1("term"), xh2("term")
-    cells = F.array(*[(hfam(d, x1, x2) % CMS_WIDTH) for d in range(CMS_DEPTH)])
     return (
-        term_counts.select("tc", F.posexplode(cells).alias("d", "cell"))
+        _cms_cells(term_counts, "tc")
         .groupBy("d", "cell")
         .agg(F.sum("tc").alias("cnt"))
     )

@@ -5,9 +5,9 @@ count-min family to be ROWS-ONLY at the oracle gate.  This module defines a
 hash family BOTH engines evaluate bit-identically, so those operators can be
 EXACT-oracled:
 
-- ``xh(col)`` — a left-fold polynomial hash of a string's characters,
-  ``h := (h*M + codepoint) % P`` with ``P = 1_000_000_007``.  Spark evaluates
-  it with ``aggregate(split(s, ''), init, ...)``; DuckDB with
+- ``xh1(expr)``/``xh2(expr)`` — a left-fold polynomial hash of a string's
+  characters, ``h := (h*M + codepoint) % P`` with ``P = 1_000_000_007``.
+  Spark evaluates it with ``aggregate(split(s, ''), init, ...)``; DuckDB with
   ``list_reduce(list_prepend(init, list_transform(string_split(s, ''), ...)))``.
   Both are plain int64 arithmetic in the engine (JVM codegen / vectorized),
   and both fold in identical left-to-right order, so the results agree
@@ -23,6 +23,16 @@ EXACT-oracled:
 
 Constants come from a fixed LCG so the family is reproducible from source
 with no runtime RNG (SURVEY §5.2: no nondeterminism in registered queries).
+
+Every Spark-side function here writes its column as SQL text and returns
+ONE ``F.expr(...)``, so making a column is one py4j round-trip instead of
+one per literal and operator (a cold 16-member signature + 4 band keys used
+to cost thousands of round-trips). The functions take SQL text too: a
+column name or any Spark SQL expression, never a ``Column``. ``hfam`` and
+``combine`` hand Spark the very ``hfam_sql``/``combine_sql`` text the DuckDB
+twins run (both engines parse ``::BIGINT``, ``%`` and the arithmetic
+identically); only the fold differs, as ``aggregate(split(...))`` against
+DuckDB's ``list_reduce``.
 
 Production swap (``SPARK_GRAFT_XXHASH=1``): the char-fold is O(chars) of
 JVM expression work per term — the right price for EXACT oracles at gate
@@ -85,25 +95,27 @@ def extended_planes(n: int) -> tuple[list[int], list[int]]:
     return _lcg_consts(1, n), _lcg_consts(2, n)
 
 
-def xh1(col: str | Column) -> Column:
-    """First string hash: portable char-fold, or xxhash64 in production."""
-    if production_hashing():
-        return F.pmod(F.xxhash64(F.lit(1), col), F.lit(XH_P))
-    return _fold(col, _M1, _INIT1)
+def xh1(expr: str) -> Column:
+    """First string hash over a Spark SQL string expression (a column name
+    or any SQL text): portable char-fold, or xxhash64 in production."""
+    return _xh(expr, 1, _M1, _INIT1)
 
 
-def xh2(col: str | Column) -> Column:
+def xh2(expr: str) -> Column:
     """Second, independent string hash (different seed tag / multiplier)."""
+    return _xh(expr, 2, _M2, _INIT2)
+
+
+def _xh(expr: str, tag: int, mult: int, init: int) -> Column:
     if production_hashing():
-        return F.pmod(F.xxhash64(F.lit(2), col), F.lit(XH_P))
-    return _fold(col, _M2, _INIT2)
+        return F.expr(f"pmod(xxhash64({tag}, {expr}), {XH_P})")
+    return _fold(expr, mult, init)
 
 
-def _fold(col: str | Column, mult: int, init: int) -> Column:
-    return F.aggregate(
-        F.split(col, ""),
-        F.lit(init).cast("long"),
-        lambda h, c: (h * mult + F.ascii(c)) % F.lit(XH_P),
+def _fold(expr: str, mult: int, init: int) -> Column:
+    return F.expr(
+        f"aggregate(split({expr}, ''), {init}::BIGINT, "
+        f"(h, c) -> (h * {mult} + ascii(c)) % {XH_P})"
     )
 
 
@@ -124,13 +136,14 @@ def _fold_sql(expr: str, mult: int, init: int) -> str:
     )
 
 
-def hfam(i: int, x1: Column, x2: Column) -> Column:
-    """i-th family hash over the fold pair — value in [0, XH_P)."""
-    return (F.lit(A[i]) * x1 + F.lit(C[i]) * x2 + F.lit(B[i])) % F.lit(XH_P)
+def hfam(i: int, x1: str = "x1", x2: str = "x2") -> Column:
+    """i-th family hash over the fold-pair columns — value in [0, XH_P)."""
+    return F.expr(hfam_sql(i, x1, x2))
 
 
 def hfam_sql(i: int, x1: str = "x1", x2: str = "x2") -> str:
-    # ::BIGINT so the products can't overflow INT32 even on literal operands
+    # ::BIGINT so the products can't overflow INT32 even on literal operands;
+    # the same text parses in Spark and DuckDB
     return (
         f"(({A[i]}::BIGINT * ({x1}) + {C[i]}::BIGINT * ({x2}) + {B[i]}) % {XH_P})"
     )
@@ -149,17 +162,9 @@ _COMBINE_M2 = 1_000_033
 COMBINE_BOUND = XH_P * XH_P
 
 
-def _combine_one(cols: list[Column], mult: int) -> Column:
-    h = cols[0]
-    for c in cols[1:]:
-        h = (h * mult + c) % F.lit(XH_P)
-    return h
-
-
-def combine(cols: list[Column]) -> Column:
-    return _combine_one(cols, _COMBINE_M1) * F.lit(XH_P) + _combine_one(
-        cols, _COMBINE_M2
-    )
+def combine(exprs: list[str]) -> Column:
+    """Band key over already-reduced value columns (names or SQL text)."""
+    return F.expr(combine_sql(exprs))
 
 
 def _combine_one_sql(exprs: list[str], mult: int) -> str:

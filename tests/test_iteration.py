@@ -35,9 +35,9 @@ def test_minhash_cluster_reliable_matches_default(spark, sf_dir, tmp_path, monke
     staged = _rows(dedup.dedup_minhash_cluster(spark, sf_dir, reliable=True))
     assert staged == base
     # bounded disk: RoundStager deletes superseded rounds, so only the
-    # member stage + the final labels round remain (NOT one dir per round)
+    # final labels round remains (NOT one dir per round)
     dirs = os.listdir(str(tmp_path / "stage"))
-    assert len(dirs) == 2
+    assert len(dirs) == 1
 
 
 def test_pagerank_reliable_matches_default(spark, sf_dir, tmp_path, monkeypatch):

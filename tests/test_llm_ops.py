@@ -722,6 +722,33 @@ def test_minhash_estimator_quality_invariants(spark, sf_dir):
     assert mean_err <= 0.30, f"mean |est - true| = {mean_err:.3f}"
 
 
+def test_est_quality_broadcast_gates_the_combined_width(spark, sf_dir):
+    """ADVICE r16 low #3: each est_quality side row carries BOTH the 16
+    signature hashes (256 B) and the token array. Under a threshold where
+    each width fits alone but their sum does not, the sides must not be
+    hinted for broadcast — only the candidate pairs' own hints remain."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    sig = dedup._table_rows(sf_dir, "documents") * 256
+    arrs = dedup._arrs_bytes(sf_dir)
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(max(sig, arrs)))
+    try:
+        assert dedup._fits_broadcast(spark, sig // 256, 256)
+        assert dedup._arrs_fits_broadcast(spark, sf_dir)
+
+        def hints(df):
+            return df._jdf.queryExecution().analyzed().toString().count(
+                "ResolvedHint"
+            )
+
+        cand_hints = hints(dedup.dedup_minhash_lsh(spark, sf_dir))
+        est_hints = hints(dedup.dedup_minhash_est_quality(spark, sf_dir))
+    finally:
+        spark.conf.set(key, old)
+    assert cand_hints > 0
+    assert est_hints == cand_hints
+
+
 def test_survivorship_totals_match_keeper_set(spark, sf_dir):
     """Per-source survivorship sums back to the corpus and to the exact
     keep-best keeper count; rates are valid proportions."""

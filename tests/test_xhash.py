@@ -60,11 +60,69 @@ def test_fold_duckdb_matches_python_reference_property(duck):
     check()
 
 
+def py_hfam(i: int, x1: int, x2: int) -> int:
+    return (X.A[i] * x1 + X.C[i] * x2 + X.B[i]) % X.XH_P
+
+
+def py_combine(vals: list[int]) -> int:
+    def fold(mult: int) -> int:
+        h = vals[0]
+        for v in vals[1:]:
+            h = (h * mult + v) % X.XH_P
+        return h
+
+    return fold(X._COMBINE_M1) * X.XH_P + fold(X._COMBINE_M2)
+
+
+def test_spark_hash_columns_match_python_and_duckdb_property(spark, duck, monkeypatch):
+    """Hypothesis strings through the SPARK hash columns: the fold pair, every
+    hfam member and a band combine must equal the pure-python reference
+    and the DuckDB twins bit for bit."""
+    pytest.importorskip("hypothesis")
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    monkeypatch.delenv("SPARK_GRAFT_XXHASH", raising=False)
+    members = range(len(X.A))
+    band = ["h0", "h1", "h2", "h3"]
+    hashes = ", ".join(f"{X.hfam_sql(i)} AS h{i}" for i in members)
+    duck_sql = f"""
+        WITH f AS (SELECT t, {X.xh1_sql('t')} AS x1, {X.xh2_sql('t')} AS x2
+                   FROM (SELECT unnest(?::VARCHAR[]) AS t)),
+        h AS (SELECT *, {hashes} FROM f)
+        SELECT *, {X.combine_sql(band)} AS band FROM h
+    """
+    ascii_printable = st.text(
+        alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=60
+    )
+
+    @given(st.lists(ascii_printable, min_size=1, max_size=25))
+    @settings(max_examples=8, deadline=None)
+    def check(words: list[str]) -> None:
+        df = spark.createDataFrame([(w,) for w in words], "t string")
+        folded = df.select("t", X.xh1("t").alias("x1"), X.xh2("t").alias("x2"))
+        fam = folded.select("*", *[X.hfam(i).alias(f"h{i}") for i in members])
+        rows = fam.select("*", X.combine(band).alias("band")).collect()
+        got = {r.t: r.asDict() for r in rows}
+        cur = duck.execute(duck_sql, [words])
+        names = [d[0] for d in cur.description]
+        want = {r[0]: dict(zip(names, r)) for r in cur.fetchall()}
+        assert got == want
+        for t, r in got.items():
+            assert r["x1"] == py_fold(t, 131, 7), t
+            assert r["x2"] == py_fold(t, 137, 17), t
+            fam_py = [py_hfam(i, r["x1"], r["x2"]) for i in members]
+            assert [r[f"h{i}"] for i in members] == fam_py, t
+            assert r["band"] == py_combine(fam_py[:4]), t
+
+    check()
+
+
 def test_family_parity_and_range(spark, duck):
-    df = spark.createDataFrame([(w,) for w in WORDS], ["term"])
-    cols = [
-        X.hfam(i, X.xh1("term"), X.xh2("term")).alias(f"h{i}") for i in (0, 7, 63)
-    ]
+    df = spark.createDataFrame([(w,) for w in WORDS], ["term"]).select(
+        "term", X.xh1("term").alias("x1"), X.xh2("term").alias("x2")
+    )
+    cols = [X.hfam(i).alias(f"h{i}") for i in (0, 7, 63)]
     rows = df.select("term", *cols).collect()
     for r in rows:
         x1 = duck.execute(f"SELECT {X.xh1_sql('?')}", [r.term]).fetchone()[0]
@@ -81,7 +139,7 @@ def test_combine_parity(spark, duck):
     vals = [123456789, 7, 999999999, 0]
     sdf = spark.createDataFrame([tuple(vals)], ["a", "b", "c", "d"])
     got = sdf.select(
-        X.combine([F.col("a"), F.col("b"), F.col("c"), F.col("d")]).alias("h")
+        X.combine(["a", "b", "c", "d"]).alias("h")
     ).collect()[0].h
     dv = duck.execute(
         "SELECT " + X.combine_sql([str(v) for v in vals])
@@ -107,10 +165,7 @@ def _sig_map(spark, docs):
         "doc_id", F.explode(F.split("text", " ")).alias("term")
     ).distinct()
     th = t.select("doc_id", X.xh1("term").alias("x1"), X.xh2("term").alias("x2"))
-    aggs = [
-        F.min(X.hfam(i, F.col("x1"), F.col("x2"))).alias(f"h{i}")
-        for i in range(16)
-    ]
+    aggs = [F.min(X.hfam(i)).alias(f"h{i}") for i in range(16)]
     return {
         r["doc_id"]: tuple(r[f"h{i}"] for i in range(16))
         for r in th.groupBy("doc_id").agg(*aggs).collect()
