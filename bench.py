@@ -419,21 +419,33 @@ def canary_spin_ms() -> float:
     return dt if acc >= 0 else dt
 
 
-def _clear_containment_cache() -> None:
-    from sdu_hadoop_indexer_spark.llm import dedup
+def _clearer(module: str, cache: str):
+    def clear() -> None:
+        import importlib
 
-    for df in dedup._CONTAINMENT_CACHE.values():
-        df.unpersist()
-    dedup._CONTAINMENT_CACHE.clear()
+        pins = getattr(importlib.import_module(module), cache)
+        for df in pins.values():
+            df.unpersist()
+        pins.clear()
+
+    return clear
 
 
 # Ops whose registered fn returns a memoize-persisted staged artifact: the
 # pin exists for composers (llm_contamination_matrix reads the containment
-# edges the way dedup_lsh_quality_eval reads the tau=0.9 set), but THIS
-# op's bench row is defined as the cost of BUILDING the artifact — so the
-# cache is cleared before every timed sample. Without this, samples 2+
-# read the pin (~0.2 s) and the frozen row silently changes meaning.
-COLD_CACHES = {"dedup_containment": _clear_containment_cache}
+# edges the way dedup_lsh_quality_eval reads the tau=0.9 set; every search
+# op reads the flat index), but THIS op's bench row is defined as the cost
+# of BUILDING the artifact — so the cache is cleared before every timed
+# sample. Without this, samples 2+ read the pin (~0.2 s) and the frozen row
+# silently changes meaning.
+COLD_CACHES = {
+    "dedup_containment": _clearer(
+        "sdu_hadoop_indexer_spark.llm.dedup", "_CONTAINMENT_CACHE"
+    ),
+    "text_index_flat": _clearer(
+        "sdu_hadoop_indexer_spark.text.indexer", "_FLAT_CACHE"
+    ),
+}
 
 # Ops that get ONE untimed warm-in rep before their timed samples
 # (COLD_CACHES still clears per rep, so the data work stays cold).

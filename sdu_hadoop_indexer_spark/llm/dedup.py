@@ -1522,8 +1522,15 @@ def _semantic_cell_verdict(
                     "dropped": dropped,
                 }
             )
+        no_drops = pd.DataFrame(
+            {"vec_id": [], "cell": [], "dropped": []}
+        ).astype({"vec_id": "int64", "cell": "int32", "dropped": "bool"})
         l = pdf[pdf["side"] == "L"]
         r = pdf[pdf["side"] == "R"]
+        # hash blocks carry no non-empty guarantee: a group whose L or R
+        # block drew no rows has no cross pairs (and a (0,) matrix)
+        if l.empty or r.empty:
+            return no_drops
         lid = l["vec_id"].to_numpy(dtype=np.int64)
         rid = r["vec_id"].to_numpy(dtype=np.int64)
         lm = np.array(list(l["embedding"]), dtype=np.float64)
@@ -1533,9 +1540,7 @@ def _semantic_cell_verdict(
         sim = np.round((lm @ rm.T) / np.outer(nl, nr), 4) + 0.0
         ai, bj = np.nonzero(sim >= COSINE_DUP_TAU)
         if not len(ai):
-            return pd.DataFrame(
-                {"vec_id": [], "cell": [], "dropped": []}
-            ).astype({"vec_id": "int64", "cell": "int32", "dropped": "bool"})
+            return no_drops
         drop_id = np.maximum(lid[ai], rid[bj])
         return pd.DataFrame(
             {

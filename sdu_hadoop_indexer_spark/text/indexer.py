@@ -76,20 +76,52 @@ def tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("term") != "")
 
 
+def _flat(toks: DataFrame) -> DataFrame:
+    """Token stream → flat postings (term, doc_id, positions, tf)."""
+    return toks.groupBy("term", "doc_id").agg(
+        F.sort_array(F.collect_list("pos")).alias("positions"),
+        F.count("*").alias("tf"),
+    )
+
+
+def _nest(flat: DataFrame, keys=("term",), df_name: str = "df") -> DataFrame:
+    """Flat postings → one doc-sorted postings array per ``keys`` group.
+    The flat index holds one row per (term, doc_id), so the array length IS
+    the document frequency — no distinct aggregate needed."""
+    return (
+        flat.groupBy(*keys)
+        .agg(
+            F.sort_array(F.collect_list(F.struct("doc_id", "positions"))).alias(
+                "postings"
+            )
+        )
+        .withColumn(df_name, F.size("postings").cast("long"))
+    )
+
+
+_FLAT_CACHE: dict[tuple[str, str], DataFrame] = {}
+
+
 def index_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flat postings: (term, doc_id, positions sorted array<int>, tf).
 
     The reference's map-side product (App.scala:153-166) — one record per
     (word, doc) with its position list — as a hash aggregation. Catalyst
     runs it partial→final (the in-mapper-combining pattern, automatically).
-    """
-    return (
-        tokenize(spark, sf_dir)
-        .groupBy("term", "doc_id")
-        .agg(
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-            F.count("*").alias("tf"),
-        )
+
+    Built ONCE per (application, sf_dir, input version) and pinned with a
+    lazy ``persist()`` (`caching.memoized_persist`, the corpus-shaped pin
+    form): every search op, the SQL views, the doc-length table and the
+    nested/sharded builds read this pin instead of re-running scan →
+    spread → tokenize → groupBy per call. It inherits the spread's doc_id
+    partitioning (the (term, doc_id) aggregation reuses that exchange), so
+    per-doc consumers group and join on it without a shuffle. 116 k rows,
+    ~3.7 MB of storage at sf0.1. At cluster scale this is the index a
+    search service writes once and serves every query from."""
+    from ..caching import memoized_persist
+
+    return memoized_persist(
+        _FLAT_CACHE, spark, sf_dir, lambda: _flat(tokenize(spark, sf_dir))
     )
 
 
@@ -101,21 +133,14 @@ def index_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     The secondary sort the reference needed the shuffle to provide
     (TextPair.compareTo, App.scala:105-111) is `sort_array` inside the agg.
     """
-    return (
-        index_flat(spark, sf_dir)
-        .groupBy("term")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("doc_id", "positions"))).alias(
-                "postings"
-            ),
-            F.countDistinct("doc_id").alias("df"),
-        )
-    )
+    return _nest(index_flat(spark, sf_dir))
 
 
 def doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token count — the App.scala:168 TODO, implemented."""
-    return tokenize(spark, sf_dir).groupBy("doc_id").agg(F.count("*").alias("dl"))
+    """Per-document token count — the App.scala:168 TODO, implemented as
+    Σ tf over the pinned flat index (no second tokenize). Empty documents
+    have no postings, so they are absent, as in the token stream."""
+    return index_flat(spark, sf_dir).groupBy("doc_id").agg(F.sum("tf").alias("dl"))
 
 
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,19 +234,10 @@ def index_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than DuckDB's sign-preserving bare `%` (ADVICE r12: the two
     diverge on negative ids; fixture ids are non-negative, but the parity
     contract should not depend on that invariant)."""
-    flat = index_flat(spark, sf_dir)
-    return (
-        flat.withColumn(
-            "shard", F.pmod("doc_id", F.lit(N_POSTING_SHARDS)).cast("int")
-        )
-        .groupBy("term", "shard")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "positions"))
-            ).alias("postings"),
-            F.countDistinct("doc_id").alias("df_shard"),
-        )
+    flat = index_flat(spark, sf_dir).withColumn(
+        "shard", F.pmod("doc_id", F.lit(N_POSTING_SHARDS)).cast("int")
     )
+    return _nest(flat, ("term", "shard"), "df_shard")
 
 
 register(
@@ -259,25 +275,8 @@ def index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus (`text_index_nested`'s own oracle)."""
     split = 250  # fixture corpora are 500 docs at every SF
     base = index_flat(spark, sf_dir).where(F.col("doc_id") < split)
-    delta = (
-        tokenize(spark, sf_dir)
-        .where(F.col("doc_id") >= split)
-        .groupBy("term", "doc_id")
-        .agg(
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-            F.count("*").alias("tf"),
-        )
-    )
-    return (
-        base.unionByName(delta)
-        .groupBy("term")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("doc_id", "positions"))).alias(
-                "postings"
-            ),
-            F.countDistinct("doc_id").alias("df"),
-        )
-    )
+    delta = _flat(tokenize(spark, sf_dir).where(F.col("doc_id") >= split))
+    return _nest(base.unionByName(delta))
 
 
 register(

@@ -8,9 +8,12 @@ ordinals, App.scala:160), and the TF-IDF/BM25 ranking that the reference's
 
 Scale notes: every query here is a composition of the flat index (one row per
 (term, doc)) with small derived dims (df table, doclen table, corpus scalars).
-The df/avgdl sides are tiny → broadcast joins; the flat index never re-sorts
-globally. Phrase match stays posting-local (array intersection per (doc,
-term-pair) row), not positional explode, so its cost is O(matching docs).
+The flat index is built once per (application, sf_dir, input version) and
+pinned (`indexer.index_flat`), so a query reads postings and never
+re-tokenizes the corpus; the doclen table and the snippet context derive from
+the same pin. The df/avgdl sides are tiny → broadcast joins. Phrase match
+stays posting-local (array intersection per (doc, term-pair) row), not
+positional explode, so its cost is O(matching docs).
 """
 
 from __future__ import annotations
@@ -661,24 +664,28 @@ def text_snippet(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's positional postings exist to serve, `App.scala:154-166`:
     positions are stored precisely so hits can be located in context).
 
-    Built from the token RELATION, not by indexing a re-split array:
-    `tokenize` ordinals count empty split slots, so positional array
-    indexing would drift on multi-space documents — joining tok on a pos
-    range is immune by construction and is also the scale shape (the
-    context join touches ~(2r+1) rows per hit, never re-scans text).
+    Answered from the pinned postings, not by re-splitting text: the hit
+    is the query term's first position (postings are sorted), and the
+    context is every posting position of that doc within the radius,
+    exploded back to (pos, term). Postings carry the same raw-split
+    ordinals `tokenize` emits — empty split slots are counted, never
+    re-indexed — so multi-space documents cannot drift, and the context
+    filter touches only the hit docs' postings, never the text.
 
     Ordered aggregation: Spark array_sort(collect_list(struct)) — the
     `agg_collect_sorted` discipline — mirrors DuckDB's
     `string_agg(... ORDER BY pos)` exactly."""
-    toks = tokenize(spark, sf_dir)
-    hit = (
-        toks.where(F.col("term") == "join")
-        .groupBy("doc_id")
-        .agg(F.min("pos").cast("int").alias("p"))
+    flat = index_flat(spark, sf_dir)
+    hit = flat.where(F.col("term") == "join").select(
+        "doc_id", F.element_at("positions", 1).alias("p")
     )
-    ctx = toks.join(hit, "doc_id").where(
-        (F.col("pos") >= F.col("p") - SNIPPET_RADIUS)
-        & (F.col("pos") <= F.col("p") + SNIPPET_RADIUS)
+    near = F.filter(
+        "positions",
+        lambda q: (q >= F.col("p") - SNIPPET_RADIUS)
+        & (q <= F.col("p") + SNIPPET_RADIUS),
+    )
+    ctx = flat.join(hit, "doc_id").select(
+        "doc_id", "p", "term", F.explode(near).alias("pos")
     )
     return ctx.groupBy("doc_id", F.col("p").alias("first_pos")).agg(
         F.array_join(
@@ -689,4 +696,3 @@ def text_snippet(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ",
         ).alias("snippet")
     )
-

@@ -35,12 +35,27 @@ EXPECTED = {
 }
 
 
-@pytest.fixture(scope="module")
-def golden_dir(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("golden")
-    df = spark.createDataFrame(GOLDEN, "doc_id long, text string, lang string, source string, n_chars long")
+# The golden corpus plus `join` documents for the snippet: a leading space
+# (the raw split's empty slot 0 shifts every ordinal by one) with double
+# spaces inside, and a tab-separated doc hitting `join` twice.
+SNIPPET_GOLDEN = GOLDEN + [
+    (5, " fast  join of  big data", "en", "src2", 24),
+    (6, "join  the\tjoin", "en", "src2", 15),
+]
+
+# Expected text_snippet rows: (doc_id, first_pos, snippet).
+EXPECTED_SNIPPETS = {(5, 2, "fast join of big"), (6, 0, "join the join")}
+
+
+def _write_golden(spark, d, rows) -> str:
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string, n_chars long")
     df.write.mode("overwrite").parquet(str(d / "documents.parquet"))
     return str(d)
+
+
+@pytest.fixture(scope="module")
+def golden_dir(spark, tmp_path_factory):
+    return _write_golden(spark, tmp_path_factory.mktemp("golden"), GOLDEN)
 
 
 def test_golden_nested_index(spark, golden_dir):
@@ -55,6 +70,17 @@ def test_golden_doclen(spark, golden_dir):
     got = {r.doc_id: r.dl for r in doclen(spark, golden_dir).collect()}
     # doc 3 (empty body) has no tokens → absent from the doclen table
     assert got == {0: 4, 1: 2, 2: 3, 4: 1}
+
+
+def test_golden_snippet_uses_raw_split_ordinals(spark, tmp_path_factory):
+    """The snippet is read off the pinned postings, whose positions are the
+    raw-split ordinals: a leading space puts the first token at 1, and
+    double spaces/tabs add no phantom slot."""
+    from sdu_hadoop_indexer_spark.text.search import text_snippet
+
+    d = _write_golden(spark, tmp_path_factory.mktemp("snippet"), SNIPPET_GOLDEN)
+    got = {tuple(r) for r in text_snippet(spark, d).collect()}
+    assert got == EXPECTED_SNIPPETS
 
 
 def test_tokenize_double_space_keeps_ordinals(spark, golden_dir):

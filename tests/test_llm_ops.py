@@ -967,6 +967,42 @@ def test_semantic_hot_cell_decomposition_matches(spark, sf_dir, monkeypatch):
     assert split == base
 
 
+def test_semantic_hot_cell_empty_block_in_cross_group(spark, tmp_path, monkeypatch):
+    """A hot cell's hash blocks carry no non-empty guarantee. With three
+    vectors that all hash to block 1 of 2, the (0, 1) cross group holds
+    only R rows; it must yield no drops instead of failing the matmul on a
+    (0,) matrix, and the diagonal group still drops the near-duplicate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(dedup, "SEMANTIC_HOT_CELL_ROWS", 2)
+    ids = sorted(
+        r.vec_id
+        for r in spark.range(200)
+        .select(F.col("id").alias("vec_id"))
+        .where(F.pmod(F.xxhash64("vec_id"), F.lit(2)) == 1)
+        .limit(3)
+        .collect()
+    )
+    vecs = [[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]]
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([0, 0, 0], pa.int32()),
+            }
+        ),
+        f"{tmp_path}/embeddings.parquet",
+    )
+    asg = spark.createDataFrame([(i, 0) for i in ids], "vec_id bigint, cell int")
+    got = {
+        tuple(r)
+        for r in dedup._semantic_cell_verdict(spark, str(tmp_path), asg).collect()
+    }
+    assert got == {(ids[0], 0, False), (ids[1], 0, True), (ids[2], 0, False)}
+
+
 def test_pq_codebooks_deterministic_and_on_lattice(spark):
     """The PQ trainer must be a pure function of the corpus: two training
     runs return identical integer codebooks covering every (cell, dim)."""
